@@ -9,18 +9,7 @@ object Bench {
     // per-partition bytes the configs were sized for — more partitions at
     // the same thread count is the cluster-correct lever (see DevBench).
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, read once at CodeGenerator init: the default 100-entry
-      // janino class cache cannot hold a 144-query catalog — by the timed
-      // pass every complex plan's classes were evicted by the other 143
-      // queries' warmup, so each heavy query paid seconds of recompilation
-      // the warmup pass was supposed to amortize
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = Engine.local(cpus.toInt, shuffleParts.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/parquet paths so the first measured query is
     // not charged one-time session startup, and touch every table once so

@@ -38,6 +38,23 @@ object Engine extends org.apache.spark.internal.Logging {
       case (b, (k, v)) => b.config(k, v)
     }
 
+  /** A single-JVM builder on top of [[builder]]: `local[cpus]` with
+    * `shufflePartitions` shuffle partitions, no UI, and a 10000-entry
+    * codegen class cache. That cache size is a static conf, read once at
+    * CodeGenerator init: the default 100 entries cannot hold the
+    * catalog, so by a second pass every complex plan's classes were
+    * evicted by the other queries' warmup and each heavy query paid
+    * seconds of recompilation again. Every main and the test fixture
+    * build their session here; callers add only what is theirs (app
+    * name, state-store provider) before `getOrCreate()`.
+    */
+  def local(cpus: Int, shufflePartitions: Int): SparkSession.Builder =
+    builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config("spark.ui.enabled", "false")
+
   /** Build (or join) the session and make the SQL function surface
     * available even when the session pre-existed this call (extensions
     * only apply at session creation; programmatic registration is

@@ -41,8 +41,8 @@ object Tables {
     *    `session_window()` (session TZ is UTC).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // The engine's entry points (Verify/Bench/DevBench) set this at session
-    // build; the guarded set here covers ad-hoc sessions (tests, shells)
+    // Every session built through `Engine` sets this at build; the guarded
+    // set here covers sessions built elsewhere (shells, other front ends)
     // without re-mutating an already-configured session on every call.
     // Harmless when the files carry a plain timestamp instead of nanos.
     if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")

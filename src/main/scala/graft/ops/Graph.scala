@@ -40,22 +40,20 @@ object Graph {
     * an invariant checker needs no normalization pass. Returns
     * (`id` long, `rank` double).
     *
-    * `broadcastMaxNodes` picks the distributed rank-join regime (see
-    * [[pageRankDistributed]]). The default is 0 — the co-partitioned
-    * SHUFFLE_HASH regime always — because the broadcast regime LOST the
-    * A/B at both measured scales (DevGraph `regimes`, idle local[32]:
-    * 18.1 s vs 12.6 s at 200k nodes / 23.9M edges; 307 s vs 256 s at 2M
-    * nodes / 239M edges, 8 iterations each): a per-round broadcast
-    * re-collects the |V|-sized rank vector to the driver and rebuilds
-    * the hash table on every executor, while the shuffle regime pays one
-    * partitioned |V| exchange and streams the stationary edge cache. On
-    * a real cluster the gap widens — broadcast ships |V| × executors
-    * bytes per round, the exchange ships |V| once. The parameter stays
-    * so tests and probes can A/B the broadcast regime.
+    * The distributed path has one rank-join regime, the co-partitioned
+    * SHUFFLE_HASH join (see [[pageRankDistributed]]). The broadcast
+    * regime it replaced LOST the A/B at both measured scales (BASELINE.md
+    * "Round 11: PageRank regimes A/B at scale", idle local[32]: 18.1 s
+    * vs 12.6 s at 200k nodes / 23.9M edges; 307 s vs 256 s at 2M nodes /
+    * 239M edges, 8 iterations each): a per-round broadcast re-collects
+    * the |V|-sized rank vector to the driver and rebuilds the hash table
+    * on every executor, while the shuffle regime pays one partitioned
+    * |V| exchange and streams the stationary edge cache. On a real
+    * cluster the gap widens — broadcast ships |V| × executors bytes per
+    * round, the exchange ships |V| once.
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      driverMaxEdges: Long = 4000000L,
-      broadcastMaxNodes: Long = 0L): DataFrame = {
+      driverMaxEdges: Long = 4000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     val spark = edges.sparkSession
@@ -100,7 +98,7 @@ object Graph {
         // materialize before the verts union scans it twice (same
         // discipline as the old count-based path decision)
         ep.count()
-        pageRankDistributed(ep, iters, damping, broadcastMaxNodes)
+        pageRankDistributed(ep, iters, damping)
       } finally ep.unpersist()
     }
   }
@@ -173,14 +171,14 @@ object Graph {
         StructField("rank", DoubleType, nullable = false))))
   }
 
-  /** Distributed path. The rank-into-edges join has two regimes. The
-    * DEFAULT (and the measured winner at every scale tried — see
-    * [[pageRank]]) shuffles the |V|-sized `rank/outdeg` vector on `src`,
-    * landing co-partitioned with the persisted bare `(src, dst)` edge
-    * layout: a SHUFFLE_HASH build of the rank side, so the stationary
-    * |E| side is neither re-shuffled nor re-sorted per round — the
-    * billion-node path, exactly two |V|-sized exchanges per round
-    * (rank-in on `src`, contribution aggregate out on `dst`). There is
+  /** Distributed path. The rank-into-edges join (the measured winner at
+    * every scale tried — see [[pageRank]]) shuffles the |V|-sized
+    * `rank/outdeg` vector on `src`, landing co-partitioned with the
+    * persisted bare `(src, dst)` edge layout: a SHUFFLE_HASH build of
+    * the rank side, so the stationary |E| side is neither re-shuffled
+    * nor re-sorted per round — the billion-node path, exactly two
+    * |V|-sized exchanges per round (rank-in on `src`, contribution
+    * aggregate out on `dst`). There is
     * NO round-closing node-table join: every node unions a zero
     * contribution carrying its static outdeg into the aggregate itself,
     * so no-inbound nodes surface with `sum(c) = 0` and the degree rides
@@ -197,10 +195,6 @@ object Graph {
     * re-shuffle the |E| side — the exact cost this layout exists to
     * avoid.
     *
-    * At or below `broadcastMaxNodes` the rank vector instead broadcasts,
-    * making each round map-side against the edge cache — kept as a
-    * parameterized alternative for A/B probes.
-    *
     * Dangling-node mass rides the SAME per-round job as an observed
     * metric (`Dataset.observe` on the rank scan that feeds the
     * contribution join), not a separate driver-collected aggregate:
@@ -211,8 +205,7 @@ object Graph {
     * and the final projection). One action — the eager localCheckpoint —
     * per iteration, for dangling and dangling-free graphs alike.
     */
-  private def pageRankDistributed(e0: DataFrame, iters: Int, d: Double,
-      broadcastMaxNodes: Long): DataFrame = {
+  private def pageRankDistributed(e0: DataFrame, iters: Int, d: Double): DataFrame = {
     val nParts = e0.sparkSession.sessionState.conf.numShufflePartitions
     // ONE aggregation pass over both edge endpoints derives the whole
     // vertex table — node set AND out-degree (dangling = outdeg 0) —
@@ -227,17 +220,12 @@ object Graph {
     var e: DataFrame = null
     try {
       val n = verts.count()
-      val small = n <= broadcastMaxNodes
       // the edge cache is bare (src, dst) longs — no weights join, no
       // per-edge double — sorted by src WITHIN each partition so the
       // columnar cache's run-length/delta encodings bite on the src
       // column (hash-arrival order leaves longs incompressible; one
-      // build-time sort is paid once, the cache is re-read every round).
-      // co-partitioning by src only matters in the shuffle regime — in
-      // broadcast mode the per-round rank join is map-side, so forcing
-      // an up-front |E| exchange would be waste
-      val bare = e0.select(col("src"), col("dst"))
-      e = (if (small) bare else bare.repartition(nParts, col("src")))
+      // build-time sort is paid once, the cache is re-read every round)
+      e = e0.select(col("src"), col("dst")).repartition(nParts, col("src"))
         .sortWithinPartitions(col("src")).persist()
       val hasDangling =
         verts.filter(col("outdeg") === 0L).limit(1).count() > 0
@@ -276,12 +264,10 @@ object Graph {
         val rankBySrc = base.filter(col("outdeg") > 0L)
           .select(col("id").as("src"),
             ((col("rank") + lit(uniform)) / col("outdeg")).as("rw"))
-        val rankSide =
-          if (small) broadcast(rankBySrc)
-          // SHUFFLE_HASH: build the |V|-sized rank side per partition so
-          // the co-partitioned cached edge side streams with no per-round
-          // sort (SMJ would re-sort |E| every iteration)
-          else rankBySrc.repartition(nParts, col("src")).hint("shuffle_hash")
+        // SHUFFLE_HASH: build the |V|-sized rank side per partition so
+        // the co-partitioned cached edge side streams with no per-round
+        // sort (SMJ would re-sort |E| every iteration)
+        val rankSide = rankBySrc.repartition(nParts, col("src")).hint("shuffle_hash")
         // the round closes INSIDE the contribution aggregate: instead of a
         // per-round node-table join (whose co-partitioning a checkpoint
         // cannot promise under AQE — the adaptive plan reports unknown

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared SparkSession fixture for all suites: small local parallelism,
-  * UTC (matches the DuckDB oracle session), AQE left on (the production
-  * config under test).
+/** Shared SparkSession fixture for all suites, built through
+  * [[Engine.local]] like every main: small local parallelism, the
+  * engine's session configs (UTC to match the DuckDB oracle session, SQL
+  * extensions), AQE left on (the production config under test).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -19,13 +20,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Engine.local(cpus = 4, shufflePartitions = 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
